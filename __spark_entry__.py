@@ -402,12 +402,9 @@ _CC_CACHE: dict[tuple, DataFrame] = {}
 def _cc_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir)
     cc = _CC_CACHE.get(key)
-    if cc is not None:
-        cc = caching.tracked_persist_shared(cc)
-    else:
-        cc = caching.tracked_persist(
-            cluster.connected_components(_neardup_pairs(spark, sf_dir))
-        )
+    if cc is None:
+        cc = cluster.connected_components(_neardup_pairs(spark, sf_dir))
+    cc = caching.tracked_persist(cc)
     _CC_CACHE[key] = cc
     return cc
 
@@ -1204,7 +1201,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir)
     e = _COPURCHASE_EDGE_CACHE.get(key)
     if e is not None:
-        e = caching.tracked_persist_shared(e)
+        e = caching.tracked_persist(e)
         _COPURCHASE_EDGE_CACHE[key] = e
         return e
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -1227,13 +1224,13 @@ def _revive_ann_index(idx):
     persisted index DataFrame may have been unpersisted while the memo
     still returns its handle — every later probe would then silently
     re-run the full bucketing/assignment/encoding pass per action,
-    defeating the build-once claim. ``tracked_persist_shared`` is the
+    defeating the build-once claim. ``caching.tracked_persist`` is the
     exact guard for this: no-op when the plan is still cached, re-persist
     plus re-registration when it was evicted.
     """
     if isinstance(idx, tuple):
-        return (caching.tracked_persist_shared(idx[0]),) + idx[1:]
-    return caching.tracked_persist_shared(idx)
+        return (caching.tracked_persist(idx[0]),) + idx[1:]
+    return caching.tracked_persist(idx)
 
 
 def _ann_index(spark: SparkSession, sf_dir: str, kind: str):
@@ -1286,7 +1283,7 @@ def _sem_capped_index(spark: SparkSession, sf_dir: str) -> tuple:
     key = (spark.sparkContext.applicationId, sf_dir)
     idx = _SEM_INDEX_CACHE.get(key)
     if idx is not None:
-        idx = (caching.tracked_persist_shared(idx[0]), idx[1])
+        idx = (caching.tracked_persist(idx[0]), idx[1])
         _SEM_INDEX_CACHE[key] = idx
         return idx
     planted = _sem_planted(spark, sf_dir)
@@ -1313,7 +1310,7 @@ def _ivf_corpus_index(spark: SparkSession, sf_dir: str, kind: str, corpus: DataF
     key = (spark.sparkContext.applicationId, sf_dir, kind)
     idx = _IVF_CORPUS_INDEX_CACHE.get(key)
     if idx is not None:
-        idx = (caching.tracked_persist_shared(idx[0]), idx[1])
+        idx = (caching.tracked_persist(idx[0]), idx[1])
         _IVF_CORPUS_INDEX_CACHE[key] = idx
         return idx
     assigned, centroids = similarity.ivf_index(corpus, 16, "embedding", seed=7)

@@ -8,11 +8,15 @@ no owner: in a long-lived session running many queries the cached blocks
 accumulate and only LRU eviction bounds executor memory.
 
 Convention: operators call :func:`tracked_persist` instead of
-``DataFrame.persist``; anything that runs many queries against one session
-(the driver entrypoint wraps every ``queries()`` callable, ``bench.py``,
-notebook users) calls :func:`release_all` between queries. Unpersisting is
-always correctness-safe — a released plan silently recomputes — so the
-worst case of a missed release stays "slower", never "wrong".
+``DataFrame.persist`` — always, with no per-operator opt-out. Cache
+lifetime is owned here, not by the operators: anything that runs many
+queries against one session (the driver entrypoint wraps every
+``queries()`` callable, ``bench.py``, notebook users) calls :func:`trim`
+or :func:`release_all` between queries, and an operator whose
+intermediate has a deterministic end-of-life calls :func:`release`.
+Unpersisting is always correctness-safe — a released plan silently
+recomputes — so the worst case of a missed release stays "slower", never
+"wrong".
 """
 
 from __future__ import annotations
@@ -23,27 +27,25 @@ _TRACKED: list[DataFrame] = []
 
 
 def tracked_persist(df: DataFrame) -> DataFrame:
-    """``df.persist()`` (default level) + registration for later release."""
-    df = df.persist()
-    _TRACKED.append(df)
-    return df
+    """``df.persist()`` (default level) + registration for later release.
 
-
-def tracked_persist_shared(df: DataFrame) -> DataFrame:
-    """``tracked_persist`` with an already-cached guard: if an identical
-    plan is cached (``df.storageLevel`` consults the cache manager by plan
-    equality), reuse it WITHOUT registering a second tracked handle.
-
-    The guard matters for canonical shared tables (shingle/fingerprint/
-    per-user reductions): a duplicate handle burns a trim() window slot,
-    and when trim pops the older duplicate its unpersist drops the shared
-    cache entry out from under the newer handle — the table silently
-    recomputes inside the keep window.
+    If an identical plan is already cached (``df.storageLevel`` consults
+    the cache manager by plan equality), the existing entry is reused
+    WITHOUT registering a second handle. Canonical shared tables (shingle,
+    fingerprint, per-user reductions, cleaning tiers) are persisted by
+    every consumer that builds them; a duplicate handle would burn a
+    ``trim()`` window slot, and when trim popped the older duplicate its
+    unpersist would drop the shared cache entry out from under the newer
+    handle — the table would silently recompute inside the keep window.
+    The same check re-persists and re-registers a memoized handle whose
+    entry ``trim()`` already evicted.
     """
     lvl = df.storageLevel
     if lvl.useMemory or lvl.useDisk:
         return df
-    return tracked_persist(df)
+    df = df.persist()
+    _TRACKED.append(df)
+    return df
 
 
 def release_all() -> int:

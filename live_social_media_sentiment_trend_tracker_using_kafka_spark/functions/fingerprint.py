@@ -116,7 +116,8 @@ def fingerprint_table(
     this EXACT plan, so the first persisted copy substitutes into every
     later consumer and the rolling-hash winnow pass over the corpus runs
     once per (corpus, k, window) per session. Already-cached plans are
-    reused, not re-registered (same guard as shingle_table)."""
+    reused, not re-registered (``caching.tracked_persist``'s guard);
+    ``persist=False`` is for ``fingerprint_containment_pairs``."""
     from ..operators.skew import fan_out
 
     fp = fan_out(df).select(
@@ -124,9 +125,9 @@ def fingerprint_table(
         F.explode(winnow_fps_col(F.col(text_col), k, window)).alias("fingerprint"),
     )
     if persist:
-        from ..caching import tracked_persist_shared
+        from ..caching import tracked_persist
 
-        fp = tracked_persist_shared(fp)
+        fp = tracked_persist(fp)
     return fp
 
 

@@ -32,7 +32,6 @@ def tfidf_top_terms(
     id_col: str = "doc_id",
     k: int = 3,
     round_digits: int = 6,
-    reuse_tf: bool = True,
 ) -> DataFrame:
     """Top-k tf·idf terms per document: (id, term, tf, df, tfidf).
 
@@ -47,10 +46,9 @@ def tfidf_top_terms(
     )
     # tf feeds three branches (df table, N, scores) — persist so the corpus
     # is tokenized once; tiny relative to the input (one row per doc-term).
-    # reuse_tf=False for callers managing caching externally.
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    if reuse_tf:
-        tf = tracked_persist(tf)
+    tf = tracked_persist(
+        toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = tf.agg(F.countDistinct(id_col).alias("_n_docs"))  # stays in-plan
     scored = (
@@ -204,7 +202,6 @@ def unigram_logprob_scores(
     text_col: str = "text",
     id_col: str = "doc_id",
     round_digits: int = 6,
-    reuse_tokens: bool = True,
 ) -> DataFrame:
     """Per-doc mean unigram log-probability — the fluency/perplexity filter.
 
@@ -221,16 +218,16 @@ def unigram_logprob_scores(
     2-value scalar aggregate (N, V) broadcasts by value, and the token
     stream joins the unigram table on token — the same shuffle shape as
     tf·idf; AQE promotes the join to broadcast when the vocab fits. The
-    token stream feeds both the unigram build and the scoring join;
-    ``reuse_tokens`` persists it to keep corpus tokenization a single pass.
+    token stream feeds both the unigram build and the scoring join; it is
+    persisted to keep corpus tokenization a single pass.
     """
     from .skew import fan_out
 
-    toks = fan_out(df).select(
-        F.col(id_col), F.explode(word_tokens_col(F.col(text_col))).alias("tok")
+    toks = tracked_persist(
+        fan_out(df).select(
+            F.col(id_col), F.explode(word_tokens_col(F.col(text_col))).alias("tok")
+        )
     )
-    if reuse_tokens:
-        toks = tracked_persist(toks)
     uni = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
     totals = uni.agg(
         F.sum("c").alias("n_total"), F.count(F.lit(1)).alias("vocab")
@@ -262,7 +259,6 @@ def bigram_logprob_scores(
     id_col: str = "doc_id",
     n: int = 2,
     round_digits: int = 6,
-    reuse_grams: bool = True,
 ) -> DataFrame:
     """Per-doc mean n-gram (default bigram) log-probability — the
     order-sensitive fluency gate.
@@ -278,16 +274,16 @@ def bigram_logprob_scores(
     Scale shape: identical to the unigram scorer — explode + hash-agg for
     the gram table, a broadcast 2-value totals row, then the gram stream
     re-joins the counts (AQE promotes to broadcast when the gram vocab
-    fits). ``reuse_grams`` persists the exploded stream so gram-building
-    runs once for both the model build and the scoring pass.
+    fits). The exploded stream is persisted so gram-building runs once
+    for both the model build and the scoring pass.
     """
     from .skew import fan_out
 
-    grams = fan_out(df).select(
-        F.col(id_col), F.explode(word_grams_col(F.col(text_col), n)).alias("gram")
+    grams = tracked_persist(
+        fan_out(df).select(
+            F.col(id_col), F.explode(word_grams_col(F.col(text_col), n)).alias("gram")
+        )
     )
-    if reuse_grams:
-        grams = tracked_persist(grams)
     counts = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("c"))
     totals = counts.agg(
         F.sum("c").alias("n_total"), F.count(F.lit(1)).alias("vocab")

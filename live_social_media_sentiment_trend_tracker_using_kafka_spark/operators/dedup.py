@@ -148,7 +148,6 @@ def shingle_table(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    persist: bool = True,
 ) -> DataFrame:
     """Canonical persisted ``(id, shingles)`` table shared by every
     shingle-consuming operator (MinHash-LSH, exact prefix-filter join, the
@@ -159,9 +158,9 @@ def shingle_table(
     contains it — one tokenize+shingle pass per (corpus, n) per session
     instead of one per operator. At 100 TB that pass dominates; measured
     ~2x on a full registry sweep at sf0.1. If the plan is already cached
-    (a prior operator persisted it) the existing entry is reused rather
-    than re-registered, so bounded cache trimming (caching.trim) sees one
-    handle per distinct corpus.
+    (a prior operator persisted it) ``caching.tracked_persist`` reuses the
+    existing entry rather than re-registering it, so bounded cache
+    trimming (caching.trim) sees one handle per distinct corpus.
     """
     # Drop empty shingle sets via explode(filter(array(...))) instead of a
     # .filter(size > 0) predicate: a deterministic predicate on the
@@ -174,9 +173,8 @@ def shingle_table(
     # higher-order filter evaluates the kernel ONCE, above the exchange,
     # and explode drops the empty rows — bit-identical output (explode of
     # an empty/NULL-pruned wrapper emits no row, exactly filter(size>0)).
-    sh = (
-        fan_out(df)
-        .select(
+    return tracked_persist(
+        fan_out(df).select(
             F.col(id_col),
             F.explode(
                 F.filter(
@@ -186,11 +184,6 @@ def shingle_table(
             ).alias("shingles"),
         )
     )
-    if persist:
-        from ..caching import tracked_persist_shared
-
-        sh = tracked_persist_shared(sh)
-    return sh
 
 
 def minhash_signature_col(shingles: Column, num_hashes: int = 32) -> Column:
@@ -303,7 +296,6 @@ def minhash_near_duplicates(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.8,
-    reuse_signatures: bool = True,
     shingle_corpus: DataFrame | None = None,
 ) -> DataFrame:
     """End-to-end MinHash-LSH near-dup: candidates → exact Jaccard verify.
@@ -312,15 +304,13 @@ def minhash_near_duplicates(
     deterministically. The exact-Jaccard join touches only candidate pairs.
 
     The shingle table feeds three plan branches (banding, verify-left,
-    verify-right); ``reuse_signatures`` persists it (memory-and-disk, via
-    the shared canonical ``shingle_table``) so the tokenize/shingle
-    computation runs once per row instead of three times — at corpus scale
-    this is the difference between one and three full text passes — and is
-    substituted into any OTHER shingle consumer in the same session (exact
-    prefix-filter join, cleaning chains). The MinHash aggregate itself is
-    computed off the cached shingles in a single branch (banding), so it
-    needs no persist of its own. Callers doing their own checkpointing can
-    pass False.
+    verify-right); it is the persisted canonical ``shingle_table``, so the
+    tokenize/shingle computation runs once per row instead of three times
+    — at corpus scale this is the difference between one and three full
+    text passes — and is substituted into any OTHER shingle consumer in the
+    same session (exact prefix-filter join, cleaning chains). The MinHash
+    aggregate itself is computed off the cached shingles in a single branch
+    (banding), so it needs no persist of its own.
 
     ``shingle_corpus``: a SUPERSET corpus whose canonical shingle table
     should be (re)used — the table is restricted to ``df``'s ids by
@@ -329,11 +319,7 @@ def minhash_near_duplicates(
     still emitted only within ``df``.
     """
     base = shingle_table(
-        shingle_corpus if shingle_corpus is not None else df,
-        text_col,
-        id_col,
-        n,
-        persist=reuse_signatures,
+        shingle_corpus if shingle_corpus is not None else df, text_col, id_col, n
     )
     if shingle_corpus is not None:
         base = base.join(df.select(id_col), id_col, "left_semi")
@@ -494,17 +480,14 @@ def simhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    arrow: bool = False,
 ) -> DataFrame:
     """(id, simhash) signature table; token-less docs excluded.
 
-    Default is the pure-Catalyst vote (``simhash_col``): measured FASTER than
-    the Arrow kernel once the input is properly parallel (``fan_out``) —
-    1.4 s vs 2.8 s full-pipeline at sf0.1/local[32] — because the kernel
-    pays an Arrow boundary without enough per-row work to amortize it.
-    ``arrow=True`` switches to functions/kernels.simhash_udf (bit-exact
-    parity unit-tested); prefer it only when profiling shows the vote
-    dominating, e.g. very long documents (>>1k tokens).
+    Pure-Catalyst vote (``simhash_from_tokens_col``): measured FASTER than
+    an Arrow-vectorized kernel once the input is properly parallel
+    (``fan_out``) — 1.4 s vs 2.8 s full-pipeline at sf0.1/local[32] —
+    because a kernel pays an Arrow boundary without enough per-row work to
+    amortize it.
     """
     from .skew import fan_out
 
@@ -514,7 +497,7 @@ def simhash_signatures(
     # per row on the unsplit scan task — and the signature expression would
     # tokenize AGAIN above it (see shingle_table, r13). The Generate
     # emits the non-empty token array once; the signature reads the bound
-    # column. Bit-identical output either path.
+    # column.
     toked = df.select(
         F.col(id_col),
         F.explode(
@@ -523,15 +506,6 @@ def simhash_signatures(
             )
         ).alias("__tk"),
     )
-    if arrow:
-        from ..functions.kernels import simhash_udf
-
-        return toked.select(
-            id_col,
-            simhash_udf()(
-                F.transform(F.col("__tk"), lambda t: F.xxhash64(t))
-            ).alias("simhash"),
-        )
     return toked.select(
         F.col(id_col), simhash_from_tokens_col(F.col("__tk")).alias("simhash")
     )
@@ -543,8 +517,6 @@ def simhash_near_duplicates(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     blocks: int = 6,
-    arrow: bool = False,
-    reuse_signatures: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs with Hamming distance ≤ max_hamming.
 
@@ -552,13 +524,11 @@ def simhash_near_duplicates(
     per-row signatures; token-less (empty/punctuation-only) docs are
     excluded — they have no content to be "near" anything.
 
-    ``reuse_signatures`` persists the (id, simhash) table — 16 bytes/doc —
-    because the banding self-join consumes it on both sides; without it the
-    full text→signature pass runs twice (per-side) at corpus scale.
+    The (id, simhash) table — 16 bytes/doc — is persisted because the
+    banding self-join consumes it on both sides; without it the full
+    text→signature pass runs twice (per-side) at corpus scale.
     """
-    sh = simhash_signatures(df, text_col, id_col, arrow)
-    if reuse_signatures:
-        sh = tracked_persist(sh)
+    sh = tracked_persist(simhash_signatures(df, text_col, id_col))
     return (
         simhash_candidate_pairs(sh, id_col, max_hamming, blocks)
         .filter(F.col("hamming") <= max_hamming)
@@ -589,8 +559,8 @@ def incremental_near_duplicates(
     Jaccard verification touches candidates alone, reading shingles from
     both sides' tables. Output ordered (incoming_id, corpus_id).
     """
-    inc_base = shingle_table(incoming, text_col, id_col, n, persist=True)
-    cor_base = shingle_table(corpus, text_col, id_col, n, persist=True)
+    inc_base = shingle_table(incoming, text_col, id_col, n)
+    cor_base = shingle_table(corpus, text_col, id_col, n)
 
     def banded(base: DataFrame, side: str) -> DataFrame:
         sigs = base.select(

@@ -147,7 +147,7 @@ def token_budget_mix(
     hex_width = max(1, ((max(chunks, 2) - 1).bit_length() + 3) // 4)
     # base feeds BOTH the chunk-totals aggregate and the window branch —
     # persist so the dominant pass (BPE token counting over text) runs once
-    # per corpus, not once per consumer (same convention as tfidf reuse_tf).
+    # per corpus, not once per consumer (same convention as tfidf_top_terms).
     base = tracked_persist(
         df.select(
             F.col(id_col),

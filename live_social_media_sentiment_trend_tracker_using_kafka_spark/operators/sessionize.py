@@ -38,11 +38,11 @@ def user_day_activity(events: DataFrame) -> DataFrame:
     shuffle of the event-analytics tier, persisted and shared: cohort
     retention and rolling-active-users construct this identical plan, so
     within a session the dedup runs once and later consumers hit the cache
-    (the shingle_table pattern; ``tracked_persist_shared`` dedups the
+    (the shingle_table pattern; ``caching.tracked_persist`` dedups the
     handle)."""
-    from ..caching import tracked_persist_shared
+    from ..caching import tracked_persist
 
-    return tracked_persist_shared(
+    return tracked_persist(
         events.select("user_id", _day().alias("day")).distinct()
     )
 
@@ -211,12 +211,12 @@ def cohort_retention(
     is identical either way (driver-hash-verified: both variants share one
     oracle).
     """
-    from ..caching import tracked_persist_shared
+    from ..caching import tracked_persist
     from .skew import salted_distinct
 
     if salt_buckets:
         user_days = events.select("user_id", _day().alias("day"), "event_id")
-        activity = tracked_persist_shared(
+        activity = tracked_persist(
             salted_distinct(user_days, ["user_id", "day"], salt_buckets, det_col="event_id")
         )
     else:
@@ -255,9 +255,9 @@ def rfm_segments(events: DataFrame) -> DataFrame:
     Scores are 1–4, higher = better (recent, frequent, high-spend). Output:
     (r_score, f_score, m_score, n_users, avg_monetary) ordered by scores.
     """
-    from ..caching import tracked_persist_shared
+    from ..caching import tracked_persist
 
-    per_user = tracked_persist_shared(
+    per_user = tracked_persist(
         events.groupBy("user_id").agg(
             F.max(_day()).alias("last_day"),
             F.count(F.lit(1)).alias("freq"),

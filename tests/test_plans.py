@@ -1023,6 +1023,7 @@ def test_text_kernels_evaluate_once_no_filter_pushdown(spark):
     planted-twin isnotnull(transform(embedding)) filters do NOT match
     this fingerprint — those are the documented examined-and-left
     sites, OPTIMIZATION_r13.md change 11.)"""
+    from live_social_media_sentiment_trend_tracker_using_kafka_spark import caching
     from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators import (
         corpus as corpus_ops,
         dedup as dedup_ops,
@@ -1033,6 +1034,10 @@ def test_text_kernels_evaluate_once_no_filter_pushdown(spark):
         [(0, "spark join window spark"), (1, ""), (2, None), (3, "one two three four")],
         "doc_id long, text string",
     )
+    # shingle_table is always persisted: its formatted plan carries the
+    # cached plan's inner tree (InMemoryRelation children), which is what
+    # both checks below inspect; the handle is released afterwards.
+    shingles = dedup_ops.shingle_table(docs)
 
     def kernel_in_condition(df, fingerprint: str) -> list[str]:
         return [
@@ -1046,10 +1051,7 @@ def test_text_kernels_evaluate_once_no_filter_pushdown(spark):
     # heuristics tokenize via bare `split(trim(` — the r13 single
     # shared fingerprint made its Condition guard silently vacuous.
     for label, (df, fingerprint) in {
-        "shingle_table": (
-            dedup_ops.shingle_table(docs, persist=False),
-            "regexp_replace(lower(",
-        ),
+        "shingle_table": (shingles, "regexp_replace(lower("),
         "simhash_signatures": (
             dedup_ops.simhash_signatures(docs),
             "regexp_replace(lower(",
@@ -1077,3 +1079,4 @@ def test_text_kernels_evaluate_once_no_filter_pushdown(spark):
             f"above is now vacuous; update the fingerprint to match the "
             f"rewritten kernel"
         )
+    caching.release(shingles)

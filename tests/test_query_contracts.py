@@ -89,6 +89,34 @@ def test_queries_trim_tracked_caches_between_calls(spark):
     assert len(caching._TRACKED) == 0
 
 
+def test_tracked_persist_one_handle_per_cached_plan(spark):
+    """Persisting an already-cached plan must not register a second
+    handle: trim() would pop the older duplicate and its unpersist would
+    drop the shared cache entry out from under the kept handle. The
+    cleaning tiers hit this on every run — clean_corpus and
+    clean_corpus_exact_neardup both persist the same exact-tier plan."""
+    from live_social_media_sentiment_trend_tracker_using_kafka_spark import caching
+    from live_social_media_sentiment_trend_tracker_using_kafka_spark.operators import pipeline
+    from live_social_media_sentiment_trend_tracker_using_kafka_spark.sources.readers import table
+
+    caching.release_all()
+    base = spark.range(100).selectExpr("id", "id % 7 AS k")
+    caching.tracked_persist(base.filter("k > 2"))
+    kept = caching.tracked_persist(base.filter("k > 2"))
+    assert len(caching._TRACKED) == 1
+    caching.trim(keep=1)
+    lvl = kept.storageLevel
+    assert lvl.useMemory or lvl.useDisk, "kept handle lost its cache entry"
+    caching.release_all()
+
+    docs = table(spark, "documents", SF_SMOKE)
+    exact = pipeline.clean_corpus_exact(docs, sort=False)
+    pipeline.clean_corpus(docs)
+    pipeline.clean_corpus_exact_neardup(docs)
+    assert sum(1 for h in caching._TRACKED if h.sameSemantics(exact)) == 1
+    caching.release_all()
+
+
 def test_semantic_near_dups_query_contract(spark):
     """SemDeDup tier: the 8 planted direction-identical twins must pair with
     their originals (same k-means cell under normalized assignment), and
@@ -662,7 +690,7 @@ def test_every_hash_checked_query_emits_only_scalar_columns(spark):
 def test_copurchase_memo_revival_survives_cache_trim(spark):
     """r12 VERDICT item 6: the session memo (_COPURCHASE_EDGE_CACHE)
     outlives caching.trim()'s keep window, so a memo hit must RE-PERSIST a
-    trim-evicted edge table (tracked_persist_shared) — otherwise every
+    trim-evicted edge table (caching.tracked_persist) — otherwise every
     pagerank rep after a long sweep silently re-runs the ~6.8 s lineitem
     self-join per action while the memo still claims build-once. This test
     goes red if the revival call is removed: the returned frame stays

@@ -33,6 +33,53 @@ import os
 import sys
 
 
+def explain_str(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def install_trace(trace: list[tuple[str, str]]) -> None:
+    """Record the plan of every ``localCheckpoint`` and
+    ``caching.tracked_persist`` call into ``trace``. Must run before the
+    operator modules are imported: ``from ..caching import tracked_persist``
+    binds the function object at import time."""
+    # patch every class that DEFINES localCheckpoint (Spark 4's classic
+    # DataFrame overrides the base-class method, so patching only
+    # pyspark.sql.DataFrame silently misses real sessions)
+    from pyspark.sql import DataFrame as _DF
+
+    from live_social_media_sentiment_trend_tracker_using_kafka_spark import (
+        caching as _caching,
+    )
+
+    classes = [_DF]
+    try:
+        from pyspark.sql.classic.dataframe import DataFrame as _CDF
+
+        classes.append(_CDF)
+    except ImportError:
+        pass
+    for cls in classes:
+        if "localCheckpoint" not in cls.__dict__:
+            continue
+        orig_lc = cls.__dict__["localCheckpoint"]
+
+        def traced_lc(self, *a, _orig=orig_lc, **kw):
+            trace.append(("localCheckpoint", explain_str(self)))
+            return _orig(self, *a, **kw)
+
+        cls.localCheckpoint = traced_lc
+    orig_tp = _caching.tracked_persist
+
+    def traced_tp(df):
+        trace.append(("tracked_persist", explain_str(df)))
+        return orig_tp(df)
+
+    _caching.tracked_persist = traced_tp
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--repo", default=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -45,6 +92,9 @@ def main() -> int:
 
     repo = os.path.abspath(args.repo)
     sys.path.insert(0, repo)
+    trace: list[tuple[str, str]] = []
+    if args.trace:
+        install_trace(trace)
     import __spark_entry__ as entrymod  # noqa: E402
 
     assert entrymod.__file__.startswith(repo), entrymod.__file__
@@ -61,48 +111,6 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
     os.makedirs(args.out, exist_ok=True)
-
-    def explain_str(df) -> str:
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        return buf.getvalue()
-
-    trace: list[tuple[str, str]] = []
-    if args.trace:
-        # patch every class that DEFINES localCheckpoint (Spark 4's classic
-        # DataFrame overrides the base-class method, so patching only
-        # pyspark.sql.DataFrame silently misses real sessions)
-        from pyspark.sql import DataFrame as _DF
-
-        from live_social_media_sentiment_trend_tracker_using_kafka_spark import (
-            caching as _caching,
-        )
-
-        classes = [_DF]
-        try:
-            from pyspark.sql.classic.dataframe import DataFrame as _CDF
-
-            classes.append(_CDF)
-        except ImportError:
-            pass
-        for cls in classes:
-            if "localCheckpoint" not in cls.__dict__:
-                continue
-            orig_lc = cls.__dict__["localCheckpoint"]
-
-            def traced_lc(self, *a, _orig=orig_lc, **kw):
-                trace.append(("localCheckpoint", explain_str(self)))
-                return _orig(self, *a, **kw)
-
-            cls.localCheckpoint = traced_lc
-        orig_tp = _caching.tracked_persist
-
-        def traced_tp(df):
-            trace.append(("tracked_persist", explain_str(df)))
-            return orig_tp(df)
-
-        _caching.tracked_persist = traced_tp
 
     rc = 0
     for name in args.names:
